@@ -5,13 +5,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.TableIO
 
-/** Append-only inc-k snapshot directories for the RETRIEVAL stores
-  * ([[IvfIndex]]/[[MipsIndex]]) — the [[IncrementalDedup]] increment layout
-  * (strict `inc-<k>` naming, gap-free 1..k, manifest-complete = committed,
-  * tmp-dir + atomic rename commit, loud lost-race) generalized over the
-  * store's stage list. IncrementalDedup keeps its own copy because its
-  * commit is interleaved with pair/cluster union writes; the semantics are
-  * deliberately identical. */
+/** Append-only inc-k snapshot directories — the ONE owner of the layout
+  * shared by [[IncrementalDedup]], [[IvfIndex]] and [[MipsIndex]]: strict
+  * `inc-<k>` naming, gap-free 1..k, manifest-complete = committed, union
+  * reads, and the tmp-dir + atomic rename commit with its loud lost-race.
+  * Store-specific checks (family tags, `base` chains, plan tags) stay in
+  * each store. */
 private[pipeline] object IncDirs {
 
   /** Committed inc dirs in order, with THREE fail-fast gates:
@@ -61,31 +60,65 @@ private[pipeline] object IncDirs {
     found
   }
 
-  /** Stage the writes into a unique tmp dir, then publish by atomic rename
-    * to `inc-<k>` — concurrent readers can never observe an in-progress
-    * append. A lost commit race (someone else published inc-k first) is a
-    * LOUD error: the staged work is left in place for inspection and the
-    * caller must re-run (its anti-join will then see the winner's rows). */
-  def commit(baseDir: String, k: Int, what: String)(write: String => Unit): String = {
+  /** The next append number: max committed + 1 (NOT count + 1 — the gap
+    * check makes them equal today, but max + 1 never collides with a
+    * surviving higher-numbered dir if the sequence rule ever changes). */
+  def next(incs: Seq[(Int, String)]): Int = incs.map(_._1).maxOption.getOrElse(0) + 1
+
+  /** A stage's full relation: the base table, then `inc-1..k`, folded left
+    * with unionByName. `incs` comes from [[committed]]. */
+  def union(spark: SparkSession, baseDir: String, incs: Seq[(Int, String)],
+      stage: String): DataFrame =
+    incs.foldLeft(TableIO.read(spark, s"$baseDir/$stage")) { case (df, (_, dir)) =>
+      df.unionByName(TableIO.read(spark, s"$dir/$stage"))
+    }
+
+  /** The newest snapshot's copy of a stage: the last inc's, else the base's
+    * (for stages each append rewrites in full). */
+  def latest(baseDir: String, incs: Seq[(Int, String)], stage: String): String =
+    s"${incs.lastOption.fold(baseDir)(_._2)}/$stage"
+
+  /** Stage the writes into a unique nonce-named tmp dir (invisible to the
+    * strict reader regex), then publish by atomic rename to `inc-<k>` —
+    * concurrent readers never observe an in-progress append, and two
+    * writers computing the same k never share a staging dir. Returns the
+    * published dir and the block's value.
+    *
+    * A lost commit race (someone else published inc-k first — before the
+    * rename, or between the exists() check and the rename) is a LOUD
+    * error: the loser deletes ONLY its own staging dir (the work can never
+    * be committed — it must be recomputed against the winner's rows, not
+    * renamed to k+1 — and left behind, [[warnStray]] would flag it forever)
+    * and a cleanup failure rides along as suppressed rather than masking
+    * the race diagnosis. A block that throws publishes nothing. */
+  def commit[T](baseDir: String, k: Int, what: String)(write: String => T): (String, T) = {
+    warnStray(baseDir)
     val finalDir = s"$baseDir/inc-$k"
     val tmp = s"$finalDir.tmp-${java.util.UUID.randomUUID().toString.take(8)}"
     Files.createDirectories(Paths.get(tmp))
-    write(tmp)
-    def lostRace(): Nothing =
-      throw new IllegalStateException(
-        s"$what append lost a commit race: $finalDir already exists (a " +
-          s"concurrent appender published first); staged work left at $tmp — " +
-          s"inspect/delete it and re-run (the re-run will see the winner's rows)")
+    val out = write(tmp)
+    def lostRace(): Nothing = {
+      val err = new IllegalStateException(
+        s"$what append lost a commit race: $finalDir was published by a " +
+          s"concurrent writer while this one was computing; its staged work " +
+          s"was discarded — re-run (the re-run recomputes against the " +
+          s"winner's rows; it must not be renamed to inc-${k + 1})")
+      try {
+        val walk = Files.walk(Paths.get(tmp))
+        try walk.iterator().asScala.toSeq.reverse.foreach(p => Files.delete(p))
+        finally walk.close()
+      } catch { case cleanup: Exception => err.addSuppressed(cleanup) }
+      throw err
+    }
     if (Files.exists(Paths.get(finalDir))) lostRace()
     try Files.move(Paths.get(tmp), Paths.get(finalDir))
     catch { case _: java.nio.file.FileAlreadyExistsException => lostRace() }
-    finalDir
+    (finalDir, out)
   }
 
   /** Shared append orchestration for the two-stage retrieval stores
     * ([[IvfIndex.append]]/[[MipsIndex.append]] both delegate here — the
-    * round-6 review found the scaffold copy-pasted, a third drift-prone
-    * shape next to IncrementalDedup's):
+    * round-6 review found the scaffold copy-pasted):
     *
     *  - quantize + cache the input ONCE; its count gives `dropped` without
     *    a second scan of the raw input relation;
@@ -107,7 +140,7 @@ private[pipeline] object IncDirs {
     *    a base rebuilt under other config. */
   def appendStages(
       spark: SparkSession, newEmb: DataFrame, baseDir: String, what: String,
-      existingVectorDirs: Seq[String], incs: Seq[(Int, String)],
+      incs: Seq[(Int, String)],
       baseChain: String, saltPrefix: String,
       secondStage: String, secondSalt: String,
       extraStat: Option[org.apache.spark.sql.Column] = None,
@@ -118,9 +151,7 @@ private[pipeline] object IncDirs {
     val q = IvfIndex.quantized(newEmb).cache()
     try {
       val nInput = q.count()
-      val existingIds = existingVectorDirs
-        .map(d => TableIO.read(spark, d).select("vec_id"))
-        .reduce(_ unionByName _)
+      val existingIds = union(spark, baseDir, incs, "vectors").select("vec_id")
       val newVecs = q.dropDuplicates("vec_id")
         .join(existingIds.hint("shuffle_hash"), Seq("vec_id"), "left_anti")
         .cache()
@@ -138,12 +169,11 @@ private[pipeline] object IncDirs {
         val dropped = nInput - nNew
         if (nNew == 0) return ("", 0L, dropped, Seq.empty)
         validate(r.getLong(1))
-        val k = incs.map(_._1).maxOption.getOrElse(0) + 1
+        val k = next(incs)
         val hv = CheckpointedDedup.chainHash(baseChain, s"${saltPrefix}_vectors",
           s"$k:v1:${StageRunner.fingerprintString(nNew, r.getLong(2))}")
         val h2 = CheckpointedDedup.chainHash(hv, s"${saltPrefix}_$secondStage", secondSalt)
-        var stages: Seq[CheckpointedDedup.StageResult] = Seq.empty
-        val incDir = commit(baseDir, k, what) { tmp =>
+        val (incDir, stages) = commit(baseDir, k, what) { tmp =>
           // The two stage writes are INDEPENDENT given the cached newVecs
           // (the second stage used to recompute from the first stage's
           // freshly WRITTEN parquet — a read-back of data already pinned in
@@ -164,13 +194,13 @@ private[pipeline] object IncDirs {
           // rename the tmp dir while a stage write is still in flight.
           // When both fail, the second failure rides along as suppressed —
           // throwing only e1 would hide e2's (possibly root-cause) error
-          // (the IncrementalDedup commit-cleanup convention).
+          // (the [[commit]] lost-race convention).
           val e1 = scala.util.Try(Await.result(f1, Duration.Inf))
           val e2 = scala.util.Try(Await.result(f2, Duration.Inf))
           (e1, e2) match {
             case (scala.util.Failure(t1), scala.util.Failure(t2)) =>
               t1.addSuppressed(t2); throw t1
-            case _ => stages = Seq(e1.get, e2.get)
+            case _ => Seq(e1.get, e2.get)
           }
         }
         (incDir, nNew, dropped, stages)
@@ -179,8 +209,10 @@ private[pipeline] object IncDirs {
   }
 
   /** WARN about stale inc-*.tmp-* staging dirs (crashed appends) — never
-    * delete them: one may belong to a LIVE concurrent appender. */
-  def warnStray(baseDir: String): Unit = {
+    * delete them: one may belong to a LIVE concurrent appender. Each retry
+    * gets a fresh nonce, so abandoned ones accumulate (the documented
+    * disk-exhaustion mode). */
+  private def warnStray(baseDir: String): Unit = {
     val base = Paths.get(baseDir)
     if (Files.exists(base)) {
       val it = Files.list(base)

@@ -293,13 +293,11 @@ object IvfIndex {
     * Zero genuinely-new rows → nothing written (report with incDir = ""). */
   def append(spark: SparkSession, newEmb: DataFrame, baseDir: String): AppendReport = {
     graft.functions.GraftExpressions.register(spark)
-    IncDirs.warnStray(baseDir)
     val (baseManifests, nCells, incs) = validateStore(baseDir)
     val baseChain = chain(baseManifests("vectors").configHash, nCells)("assignment")
     val cent = TableIO.read(spark, s"$baseDir/centroids")
     val (incDir, nNew, nDropped, stages) = IncDirs.appendStages(
       spark, newEmb, baseDir, "IVF store",
-      existingVectorDirs = s"$baseDir/vectors" +: incs.map { case (_, d) => s"$d/vectors" },
       incs = incs, baseChain = baseChain, saltPrefix = "ivf_append",
       secondStage = "assignment", secondSalt = "argmax",
       computeSecond = newVecs => assignment(newVecs, cent, nCells))
@@ -358,13 +356,9 @@ object IvfIndex {
       spark: SparkSession, baseDir: String): (DataFrame, DataFrame, DataFrame) = {
     graft.functions.GraftExpressions.register(spark)
     val (_, _, incs) = validateStore(baseDir)
-    def unioned(stage: String): DataFrame =
-      (Seq(s"$baseDir/$stage") ++ incs.map { case (_, d) => s"$d/$stage" })
-        .map(d => TableIO.read(spark, d))
-        .reduce(_ unionByName _)
-    val e = unioned("vectors").cache() // probe + rerank branches
+    val e = IncDirs.union(spark, baseDir, incs, "vectors").cache() // probe + rerank branches
     val cent = TableIO.read(spark, s"$baseDir/centroids")
-    val cell = unioned("assignment")
+    val cell = IncDirs.union(spark, baseDir, incs, "assignment")
     (e, cent, cell)
   }
 }

@@ -35,8 +35,8 @@ object MipsIndex {
       incDir: String, newVectors: Long, droppedDupOrStored: Long,
       stages: Seq[CheckpointedDedup.StageResult])
 
+  // base and every inc-k snapshot hold the same two stages
   private val StageNames = Seq("vectors", "bits")
-  private val IncStageNames = Seq("vectors", "bits")
 
   private def planSalt(p: MipsPlan): String =
     s"${p.tables}:${p.planesPerTable}:${p.bucketBits}"
@@ -103,7 +103,6 @@ object MipsIndex {
     * rebuild the store when the corpus outgrows its maxnorm. */
   def append(spark: SparkSession, newEmb: DataFrame, baseDir: String): AppendReport = {
     graft.functions.GraftExpressions.register(spark)
-    IncDirs.warnStray(baseDir)
     val (manifests, p, m2Opt, incs) = validateStore(baseDir)
     val m2 = m2Opt.getOrElse(throw new IllegalStateException(
       s"MIPS store at $baseDir predates the append feature (bits manifest " +
@@ -112,7 +111,6 @@ object MipsIndex {
     val baseChain = bitsHash(manifests("vectors").configHash, p)
     val (incDir, nNew, nDropped, stages) = IncDirs.appendStages(
       spark, newEmb, baseDir, "MIPS store",
-      existingVectorDirs = s"$baseDir/vectors" +: incs.map { case (_, d) => s"$d/vectors" },
       incs = incs, baseChain = baseChain, saltPrefix = "mips_append",
       secondStage = "bits", secondSalt = planSalt(p),
       // maxnorm check FUSED into the core's count agg (one job)
@@ -163,13 +161,9 @@ object MipsIndex {
       spark: SparkSession, baseDir: String): (DataFrame, DataFrame, MipsPlan) = {
     graft.functions.GraftExpressions.register(spark)
     val (_, p, _, incs) = validateStore(baseDir)
-    def unioned(stage: String): DataFrame =
-      (Seq(s"$baseDir/$stage") ++ incs.map { case (_, d) => s"$d/$stage" })
-        .map(d => TableIO.read(spark, d))
-        .reduce(_ unionByName _)
-    val vectors = unioned("vectors")
+    val vectors = IncDirs.union(spark, baseDir, incs, "vectors")
     // the bits read-back feeds two plan branches (bucket join + rerank)
-    val corpus = unioned("bits").cache()
+    val corpus = IncDirs.union(spark, baseDir, incs, "bits").cache()
     (vectors, corpus, p)
   }
 
@@ -197,7 +191,7 @@ object MipsIndex {
       s"MIPS store at $baseDir: the bits stage was written for a different " +
         s"input/plan than the current vectors stage (hash chain broken) — " +
         s"re-run MipsIndex.build")
-    val incs = IncDirs.committed(baseDir, IncStageNames, "MIPS store")
+    val incs = IncDirs.committed(baseDir, StageNames, "MIPS store")
     incs.foreach { case (_, dir) =>
       val vm = TableIO.readManifest(s"$dir/vectors").get
       val bm = TableIO.readManifest(s"$dir/bits").get

@@ -44,27 +44,6 @@ object IvfProbe {
           val emb = vectors(spark, n, cores * 4).cache()
           emb.count()
           val nCells = math.ceil(math.sqrt(n.toDouble)).toInt
-          // -Dgraft.ivf.verbose=true: per-phase walls (quantize-cache /
-          // assignment-only) before the timed full-operator run — the
-          // IncrementalProbe diagnosis pattern
-          // the phases are the PRODUCTION kernel pieces (IvfIndex), not a
-          // re-derivation — a probe-local copy would drift from what ships
-          if (java.lang.Boolean.getBoolean("graft.ivf.verbose")) {
-            import graft.pipeline.IvfIndex
-            var t = System.nanoTime()
-            val e = IvfIndex.quantized(emb).cache()
-            e.count()
-            println(f"[ivf-probe]   quantize+cache: ${(System.nanoTime() - t) / 1e9}%.2f s")
-            t = System.nanoTime()
-            val cent = IvfIndex.centroids(e, nCells)
-            val nCent = cent.count()
-            println(f"[ivf-probe]   centroid sample: ${(System.nanoTime() - t) / 1e9}%.2f s ($nCent cells)")
-            t = System.nanoTime()
-            val s = IvfIndex.assignment(e, cent, nCells)
-              .agg(org.apache.spark.sql.functions.sum("cid")).first().getLong(0)
-            println(f"[ivf-probe]   assignment-only: ${(System.nanoTime() - t) / 1e9}%.2f s (sum=$s)")
-            e.unpersist(blocking = false)
-          }
           val t0 = System.nanoTime()
           val (res, pinned) = graft.SparkEntry.ivfTopKWithHandle(
             emb, col("vec_id") < 32, nCells)
