@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{CrossEngine, GraftFunctions}
+import graft.functions.CrossEngine
 import graft.pipeline.{Dedup, DedupConfig, SignAlshRetrieval, SimHashDedup}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + FIXTURES.md.

@@ -105,7 +105,7 @@ object MinHashKernel {
 }
 
 /** Native codegen expression for the MinHash signature (same semantics as
-  * GraftFunctions.minhashSigUdf; ~no boxing, stays inside WholeStageCodegen). */
+  * the minhashSigUdf reference twin; ~no boxing, stays inside WholeStageCodegen). */
 case class MinHashSignatureExpr(child: Expression, k: Int, seed: Long)
     extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -311,9 +311,9 @@ object GraftExpressions {
     ("graft_plane_bits", e =>
       if (e.length == 4) PlaneBitsExpr(e(0), lit2Str(e(1)), lit2Int(e(2)), lit2Int(e(3)))
       else PlaneBitsExpr(e(0), lit2Str(e(1)), 0, lit2Int(e(2)))),
-    ("graft_plane_dots", e =>
-      if (e.length == 4) PlaneDotsExpr(e(0), lit2Str(e(1)), lit2Int(e(2)), lit2Int(e(3)))
-      else PlaneDotsExpr(e(0), lit2Str(e(1)), 0, lit2Int(e(2)))),
+    // 4-arg form = index side (v, m2, T, P); 3-arg form = query side (v, T, P)
+    ("graft_mips_bits", e =>
+      MipsBitsExpr(e.dropRight(2), lit2Int(e(e.length - 2)), lit2Int(e.last))),
     ("graft_cosq", e => CosineQuantizedExpr(e(0), e(1))),
     ("graft_md5_minhash", e => Md5MinHashExpr(e(0), lit2Int(e(1)))),
     ("graft_md5_minhash_text", e => Md5MinHashTextExpr(e(0), lit2Int(e(1)), lit2Int(e(2)))),

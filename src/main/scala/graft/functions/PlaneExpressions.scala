@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, EmptyBlock, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
@@ -77,25 +77,73 @@ object PlaneKernel {
 
   def bits(v: ArrayData, tag: String, n: Int): Long = bits(v, tag, 0, n)
 
-  /** Raw dot products of GLOBAL planes off..off+n−1 (for transforms that add
-    * norm terms, e.g. SignALSH's P-transform; offset = multi-table layout). */
-  def dots(v: ArrayData, tag: String, off: Int, n: Int): ArrayData = {
+  private val mipsSignCache =
+    new java.util.concurrent.ConcurrentHashMap[Integer, Array[Double]]()
+
+  /** SignALSH norm-term signs of "mips" planes 0..n−1, flat: entries
+    * 3g..3g+2 are rademacher("mips", g, 64..66) — the virtual dims the
+    * P-transform's three norm components sit at. Derived once per (JVM, n). */
+  private def mipsNormSigns(n: Int): Array[Double] =
+    mipsSignCache.computeIfAbsent(n, _ =>
+      Array.tabulate(3 * n)(j => CrossEngine.rademacher("mips", j / 3, 64 + j % 3).toDouble))
+
+  /** SignALSH packed sign bits, one long per table: table t's local bit p is
+    * the sign of global "mips" plane g = t·P + p. Index side (`query` false)
+    * signs the P-transform under maxnorm m2:
+    *   ((d/√M2 + s₆₄·(½−n2)) + s₆₅·(½−n2²)) + s₆₆·(½−n2²·n2²),  n2 = ‖v‖²/M2;
+    * query side signs the Q-transform d/√‖v‖² (m2 unused). The association
+    * order is the reference Column tree's (ReferenceTwins in the test
+    * sources; the DuckDB oracle of q_mips_signalsh uses it too), so every
+    * bit matches it. A bit is set iff Spark's `term >= 0` holds: ±0.0 and
+    * NaN (greatest in Spark's double ordering) set it. The two inputs on
+    * which the tree divides by zero (ANSI error) fail here too, naming the
+    * cause. */
+  def mipsBits(v: ArrayData, m2: Long, query: Boolean, tables: Int, pp: Int): ArrayData = {
     val dim = v.numElements()
-    val pl = planes(tag, off + n, dim)
-    val out = new Array[Long](n)
-    var p = 0
-    while (p < n) {
-      val row = pl(off + p)
-      var dot = 0L
-      var i = 0
-      while (i < dim) { dot += row(i) * v.getLong(i); i += 1 }
-      out(p) = dot
-      p += 1
+    val n = tables * pp
+    val pl = planes("mips", n, dim)
+    var nv = 0L
+    var i = 0
+    while (i < dim) { val x = v.getLong(i); nv += x * x; i += 1 }
+    if (query && nv == 0L)
+      throw new ArithmeticException(
+        "graft_mips_bits: a zero-norm probe vector has no direction under the " +
+          "SignALSH Q-transform (d/‖v‖ divides by zero) — drop all-zero probes")
+    if (!query && m2 == 0L)
+      throw new ArithmeticException(
+        "graft_mips_bits: maxnorm M2 = 0, i.e. every indexed vector is all-zero — " +
+          "the SignALSH P-transform (d/√M2, ‖v‖²/M2) is undefined for such a corpus")
+    val signs = if (query) null else mipsNormSigns(n)
+    val m2d = m2.toDouble
+    val scale = if (query) math.sqrt(nv.toDouble) else math.sqrt(m2d)
+    val n2 = nv.toDouble / m2d
+    val n2sq = n2 * n2
+    val a = 0.5 - n2
+    val b = 0.5 - n2sq
+    val c = 0.5 - n2sq * n2sq
+    val out = new Array[Long](tables)
+    var t = 0
+    while (t < tables) {
+      var w = 0L
+      var p = 0
+      while (p < pp) {
+        val g = t * pp + p
+        val row = pl(g)
+        var dot = 0L
+        i = 0
+        while (i < dim) { dot += row(i) * v.getLong(i); i += 1 }
+        val d = dot.toDouble / scale
+        val term =
+          if (query) d
+          else ((d + signs(3 * g) * a) + signs(3 * g + 1) * b) + signs(3 * g + 2) * c
+        if (!(term < 0.0)) w |= 1L << p
+        p += 1
+      }
+      out(t) = w
+      t += 1
     }
     new GenericArrayData(out)
   }
-
-  def dots(v: ArrayData, tag: String, n: Int): ArrayData = dots(v, tag, 0, n)
 
   /** Quantize a float/double array to int64: element-wise
     * round(e.toDouble * q).toLong with EXACTLY Spark's Round-then-Cast
@@ -212,22 +260,51 @@ case class PlaneBitsExpr(child: Expression, tag: String, off: Int, n: Int)
   override def prettyName: String = "graft_plane_bits"
 }
 
-/** graft_plane_dots(v, tag, [off,] n): raw integer dot products of planes
-  * off..off+n−1 (off defaults to 0). */
-case class PlaneDotsExpr(child: Expression, tag: String, off: Int, n: Int)
-    extends UnaryExpression with LongArrayInput {
+/** graft_mips_bits(v, m2, T, P) — index side, P-transform under maxnorm m2;
+  * graft_mips_bits(v, T, P) — query side, Q-transform: T packed SignALSH
+  * sign-bit words of P planes each ([[PlaneKernel.mipsBits]]), one fused
+  * loop over all T·P planes per row. A null v, or a null m2, gives T zero
+  * words, as in the reference tree, whose `when(term >= 0, …).otherwise(0)`
+  * maps a null term to 0. */
+case class MipsBitsExpr(children: Seq[Expression], tables: Int, planesPerTable: Int)
+    extends Expression with LongArrayInput {
+  private def query: Boolean = children.length == 1
   override def checkInputDataTypes(): TypeCheckResult =
-    if (off < 0 || n < 1)
-      TypeCheckResult.TypeCheckFailure(s"need off ≥ 0 and n ≥ 1, got off=$off n=$n")
-    else arrayInputCheck(child.dataType)
+    if (tables < 1 || planesPerTable < 1 || planesPerTable > 63)
+      TypeCheckResult.TypeCheckFailure(
+        s"need T ≥ 1 and 1 ≤ P ≤ 63, got T=$tables P=$planesPerTable")
+    else if (children.isEmpty || children.length > 2)
+      TypeCheckResult.TypeCheckFailure(s"expected (v[, m2], T, P), got ${children.length} columns")
+    else if (!query && children(1).dataType != LongType)
+      TypeCheckResult.TypeCheckFailure(s"m2 must be bigint, got ${children(1).dataType}")
+    else arrayInputCheck(children.head.dataType)
+  override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    PlaneKernel.dots(input.asInstanceOf[ArrayData], tag, off, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"""graft.functions.PlaneKernel.dots($c, "$tag", $off, $n)""")
-  override protected def withNewChildInternal(newChild: Expression): PlaneDotsExpr =
-    copy(child = newChild)
-  override def prettyName: String = "graft_plane_dots"
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val v = children.head.eval(input)
+    val m2 = if (query) 0L else children(1).eval(input)
+    if (v == null || m2 == null) new GenericArrayData(new Array[Long](tables))
+    else PlaneKernel.mipsBits(v.asInstanceOf[ArrayData], m2.asInstanceOf[Long], query,
+      tables, planesPerTable)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = children.head.genCode(ctx)
+    val (m2Code, m2Null, m2Value) =
+      if (query) (EmptyBlock, "false", "0L")
+      else { val m = children(1).genCode(ctx); (m.code, m.isNull.toString, m.value.toString) }
+    val ad = classOf[ArrayData].getName
+    ev.copy(code = code"""
+      ${v.code}
+      $m2Code
+      $ad ${ev.value} = (${v.isNull} || $m2Null)
+        ? new ${classOf[GenericArrayData].getName}(new long[$tables])
+        : graft.functions.PlaneKernel.mipsBits(${v.value}, $m2Value, $query, $tables, $planesPerTable);
+      """, isNull = FalseLiteral)
+  }
+  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): MipsBitsExpr =
+    copy(children = newChildren)
+  override def prettyName: String = "graft_mips_bits"
 }
 
 /** graft_md5_minhash(grams, k): all k md5-lane minhash minima in one pass
@@ -298,8 +375,8 @@ case class SimHash56Expr(child: Expression) extends UnaryExpression {
 /** graft_quantize(v[, q]): float/double array → int64 array, element-wise
   * round(e*q) with Spark's exact Round/Cast semantics (q defaults to 1000,
   * the engine-wide embedding quantum). Codegen replacement for the
-  * interpreted transform() in GraftFunctions.quantize — that built-in tree
-  * stays as the pinned reference form. */
+  * interpreted transform() tree, which stays in the test sources as the
+  * pinned reference twin (ReferenceTwins.quantize). */
 case class QuantizeExpr(child: Expression, q: Long) extends UnaryExpression {
   private def isFloat: Boolean = child.dataType match {
     case ArrayType(org.apache.spark.sql.types.FloatType, _) => true

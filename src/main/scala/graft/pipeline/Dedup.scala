@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** Job configuration — the analogue of a constructed `LSHFunction` bundle
   * (/root/reference/src/LSHBase.jl:24): immutable, seed-derived, broadcastable.

@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.CrossEngine
 
 /** SignALSH maximum-inner-product retrieval
   * (/root/reference/src/hashes/sign_alsh.jl — index_hash applies the
@@ -66,25 +65,16 @@ object SignAlshRetrieval {
     * fused codegen loop). The caller owns releasing the pinned cache
     * (Bench/Verify clearCache between queries).
     *
-    * Double arithmetic for the P/Q-transform terms deliberately stays in
-    * Catalyst built-ins with a fixed association order, so the single-table
+    * The P/Q-transform hashing is one fused codegen kernel,
+    * `graft_mips_bits` (PlaneKernel.mipsBits). It keeps the IEEE
+    * association order of the reference Column tree, so the single-table
     * instantiation is bitwise-reproducible by the DuckDB oracle
-    * (SparkEntry q_mips_signalsh). Probes are explicitly broadcast (a
-    * handful of rows); the corpus side never is. */
+    * (SparkEntry q_mips_signalsh); CodegenStrictSpec pins kernel ≡ tree
+    * bitwise, including a row on which any other order flips a bit.
+    * Probes are explicitly broadcast (a handful of rows); the corpus side
+    * never is. */
   def topK(e: DataFrame, plan: MipsPlan, isProbe: Column, k: Int): DataFrame =
     topKWithHandle(e, plan, isProbe, k)._1
-
-  /** All of table t's raw plane dots in one fused codegen pass; ONE select
-    * for all tables — a per-table withColumn fold re-analyzes the growing
-    * plan each call, O(T²) driver work at planFor(10⁹)'s T=143. */
-  private def withPlaneDots(in: DataFrame, plan: MipsPlan): DataFrame =
-    in.select(col("*") +: (0 until plan.tables).map(t =>
-      call_function("graft_plane_dots", col("v"), lit("mips"),
-        lit(t * plan.planesPerTable), lit(plan.planesPerTable)).as(s"pd$t")): _*)
-
-  private def signBits(plan: MipsPlan)(term: Int => Column): Column =
-    (0 until plan.planesPerTable)
-      .map(p => when(term(p) >= 0, lit(1L << p)).otherwise(lit(0L))).reduce(_ + _)
 
   /** (vec_id, bits): index-side packed sign bits of the P-transform for
     * EVERY table, in one corpus pass — the index-build artifact (O(n·T)
@@ -96,7 +86,7 @@ object SignAlshRetrieval {
   def corpusBits(e: DataFrame, plan: MipsPlan): DataFrame = {
     graft.functions.GraftExpressions.register(e.sparkSession)
     val m2 = e.agg(max(call_function("graft_dot", col("v"), col("v"))).as("m2"))
-    corpusBitsFrom(e.crossJoin(broadcast(m2)), plan)
+    indexBits(e.crossJoin(broadcast(m2)), col("m2"), plan)
   }
 
   /** [[corpusBits]] with the maxnorm M2 FROZEN to a known value instead of
@@ -109,42 +99,23 @@ object SignAlshRetrieval {
     * literal equals the in-plan max (MipsIndexSpec pins it). */
   def corpusBitsWithM2(e: DataFrame, plan: MipsPlan, m2: Long): DataFrame = {
     graft.functions.GraftExpressions.register(e.sparkSession)
-    corpusBitsFrom(e.withColumn("m2", lit(m2)), plan)
+    indexBits(e, lit(m2), plan)
   }
 
-  private def corpusBitsFrom(eWithM2: DataFrame, plan: MipsPlan): DataFrame = {
-    val P = plan.planesPerTable
-    val base = withPlaneDots(
-      eWithM2.withColumn("nv", call_function("graft_dot", col("v"), col("v"))),
-      plan)
-    val m2d = col("m2").cast("double")
-    val n2 = col("nv").cast("double") / m2d
-    val n2sq = n2 * n2
-    def idxTerm(t: Int)(p: Int): Column = {
-      val g = t * P + p
-      val d = element_at(col(s"pd$t"), p + 1).cast("double") / sqrt(m2d)
-      d + lit(CrossEngine.rademacher("mips", g, 64).toDouble) * (lit(0.5) - n2) +
-        lit(CrossEngine.rademacher("mips", g, 65).toDouble) * (lit(0.5) - n2sq) +
-        lit(CrossEngine.rademacher("mips", g, 66).toDouble) * (lit(0.5) - n2sq * n2sq)
-    }
-    base.select(col("vec_id"),
-      array((0 until plan.tables).map(t => signBits(plan)(idxTerm(t))): _*).as("bits"))
-  }
+  private def indexBits(e: DataFrame, m2: Column, plan: MipsPlan): DataFrame =
+    e.select(col("vec_id"), call_function("graft_mips_bits", col("v"), m2,
+      lit(plan.tables), lit(plan.planesPerTable)).as("bits"))
 
   /** (probe_id, qbits): query-side sign bits for the rows matching isProbe —
     * unit-normalized Q-transform (zero norm components → sign of d/‖v‖),
     * which needs NO maxnorm: probes hash identically whether computed at
     * build time or against a persisted index. The filter runs BEFORE the
-    * plane-dot projection, so per-row hash work only for the probe rows. */
+    * hashing projection, so per-row hash work only for the probe rows. An
+    * all-zero probe has no direction and fails the query. */
   def probeBits(e: DataFrame, plan: MipsPlan, isProbe: Column): DataFrame = {
     graft.functions.GraftExpressions.register(e.sparkSession)
-    val base = withPlaneDots(
-      e.where(isProbe).withColumn("nv", call_function("graft_dot", col("v"), col("v"))),
-      plan)
-    def qryTerm(t: Int)(p: Int): Column =
-      element_at(col(s"pd$t"), p + 1).cast("double") / sqrt(col("nv").cast("double"))
-    base.select(col("vec_id").as("probe_id"),
-      array((0 until plan.tables).map(t => signBits(plan)(qryTerm(t))): _*).as("qbits"))
+    e.where(isProbe).select(col("vec_id").as("probe_id"), call_function("graft_mips_bits",
+      col("v"), lit(plan.tables), lit(plan.planesPerTable)).as("qbits"))
   }
 
   /** [[topK]] plus the pinned relations (the

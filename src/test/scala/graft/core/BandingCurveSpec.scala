@@ -2,7 +2,7 @@ package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.DedupConfig
-import graft.functions.GraftFunctions
+import graft.functions.ReferenceTwins
 
 /** The banding curve p(s) = 1 − (1 − s^r)^b is the design contract behind
   * (b, r, threshold) choices (docs/DESIGN-br.md). Mirrors the reference's
@@ -67,8 +67,8 @@ class BandingCurveSpec extends AnyFunSuite {
         val b = b0.map(x => Rng.hash2(seed, x)).distinct.sorted
         val sigA = MinHasher(cfg.numHashes, seed)(a)
         val sigB = MinHasher(cfg.numHashes, seed)(b)
-        val bandsA = GraftFunctions.bandHashes(sigA, cfg.bands, cfg.rowsPerBand, seed)
-        val bandsB = GraftFunctions.bandHashes(sigB, cfg.bands, cfg.rowsPerBand, seed)
+        val bandsA = ReferenceTwins.bandHashes(sigA, cfg.bands, cfg.rowsPerBand, seed)
+        val bandsB = ReferenceTwins.bandHashes(sigB, cfg.bands, cfg.rowsPerBand, seed)
         bandsA.zip(bandsB).exists { case (x, y) => x == y }
       }
       hits.toDouble / trials

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
-import graft.functions.{CrossEngine, MinHashKernel, PlaneKernel}
+import graft.functions.{CrossEngine, MinHashKernel, PlaneKernel, ReferenceTwins}
 
 /** EVERY graft_* expression must actually compile under whole-stage codegen.
   *
@@ -94,15 +94,120 @@ class CodegenStrictSpec extends AnyFunSuite {
     assert(got == PlaneKernel.bits(arr(vecA), "ann", 24))
   }
 
-  test("graft_plane_dots compiles strictly and matches the kernel") {
+  test("graft_mips_bits compiles strictly and matches the SignALSH Column tree bitwise") {
     import spark.implicits._
     graft.functions.GraftExpressions.register(spark)
-    val got = strictCodegen {
-      Seq(vecA).toDF("v")
-        .select(call_function("graft_plane_dots", col("v"), lit("mips"), lit(16)))
-        .collect().head.getSeq[Long](0)
+    import graft.pipeline.SignAlshRetrieval
+    import graft.pipeline.SignAlshRetrieval.MipsPlan
+    val r = new scala.util.Random(29)
+    val dim = 64
+    val randoms = for (s <- Seq(1L, 10L, 100L, 1000L, 10000L, 100000L); _ <- 0 until 40)
+      yield Array.fill(dim)(r.nextLong() % (s + 1))
+    val units = (0 until dim).flatMap(i => Seq(1L, -1L).map(x => Array.tabulate(dim)(j => if (j == i) x else 0L)))
+    val maxNorm = Array.fill(dim)(100000L) // ‖v‖² = M2: n2 = 1 exactly
+    // ‖v‖² wraps negative: the Q-transform's d/√‖v‖² is NaN, which Spark's
+    // `>= 0` orders above zero — every query bit set
+    val wrapped = Array.tabulate(dim)(j => if (j == 0) 3037000500L else 0L)
+    val vecs = (randoms ++ units :+ maxNorm :+ wrapped).zipWithIndex
+      .map { case (v, i) => (i.toLong, v) }
+    val zeroId = vecs.length.toLong
+    val nullId = zeroId + 1
+    val index = (vecs :+ ((zeroId, Array.fill(dim)(0L))) :+ ((nullId, null: Array[Long]))).toDF("vec_id", "v")
+    val probes = (vecs :+ ((nullId, null: Array[Long]))).toDF("vec_id", "v")
+    val m2 = vecs.map { case (_, v) => v.map(x => x * x).sum }.max
+    assert(m2 == dim * 100000L * 100000L)
+    def bits(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+      df.collect().map(row => row.getLong(0) -> row.getSeq[Long](1)).toMap
+    def interpreted[T](body: => T): T = {
+      val keys = Seq("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+      keys.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally keys.foreach { case (k, _) => spark.conf.unset(k) }
     }
-    assert(got == PlaneKernel.dots(arr(vecA), "mips", 16).toLongArray().toSeq)
+    for (plan <- Seq(MipsPlan(1, 16, 6), MipsPlan(2, 16, 4), SignAlshRetrieval.planFor(16000L),
+        MipsPlan(3, 63, 10))) {
+      val zeros = Seq.fill(plan.tables)(0L)
+      val wantIdx = bits(ReferenceTwins.mipsIndexBits(index.withColumn("m2", lit(m2)), plan))
+      val wantQry = bits(ReferenceTwins.mipsProbeBits(probes, plan))
+      assert(wantIdx(nullId) == zeros && wantQry(nullId) == zeros)
+      assert(wantQry(vecs.last._1) == Seq.fill(plan.tables)(-1L >>> (64 - plan.planesPerTable)))
+      val (literal, inPlan, query) = strictCodegen {
+        (bits(SignAlshRetrieval.corpusBitsWithM2(index, plan, m2)),
+          bits(SignAlshRetrieval.corpusBits(index, plan)),
+          bits(SignAlshRetrieval.probeBits(probes, plan, lit(true))))
+      }
+      val evalPath = interpreted(bits(SignAlshRetrieval.corpusBitsWithM2(index, plan, m2)))
+      assert(literal == wantIdx, s"$plan: index bits (literal M2) differ from the tree")
+      assert(inPlan == wantIdx, s"$plan: index bits (in-plan M2) differ from the tree")
+      assert(evalPath == wantIdx, s"$plan: interpreted index bits differ from the tree")
+      assert(query == wantQry, s"$plan: query bits differ from the tree")
+    }
+  }
+
+  test("graft_mips_bits keeps the tree's IEEE association order where rounding decides a bit") {
+    import spark.implicits._
+    graft.functions.GraftExpressions.register(spark)
+    import graft.pipeline.SignAlshRetrieval
+    import graft.pipeline.SignAlshRetrieval.MipsPlan
+    // Random rows almost never sit within an ulp of a plane, so they cannot
+    // tell association orders apart. This row can. It is the max-norm row
+    // (n2 = 1, so the norm terms are exactly ∓½), on a plane g whose signs
+    // are (s64, s65, s66) = (+, +, −), with d = dot/√M2 = ½ − 2⁻⁵⁴ (the
+    // largest double below ½). The true term d − ½ − ½ + ½ is −2⁻⁵⁴ (bit 0),
+    // and every order that keeps d − ½ exact says so; the tree's order
+    // rounds (d − ½) − ½ to −1 and then adds ½, giving 0.0 (bit 1).
+    val plan = MipsPlan(1, 16, 6)
+    def s(g: Int, i: Int): Int = CrossEngine.rademacher("mips", g, i)
+    val g = (0 until plan.planesPerTable).find(g => s(g, 64) == 1 && s(g, 65) == 1 && s(g, 66) == -1).get
+    // dot = D and ‖v‖² = 4D² + 1: D at v₀, then pairs (m, ∓m) that add 2m²
+    // to the norm and nothing to plane g's dot
+    val dd = Iterator.iterate(30000001L)(_ + 2)
+      .find(d => d.toDouble / math.sqrt((4 * d * d + 1).toDouble) == 0.5 - math.pow(2, -54)).get
+    val v = new Array[Long](64)
+    v(0) = s(g, 0) * dd
+    var rem = (3 * dd * dd + 1) / 2
+    var j = 1
+    while (rem > 0) {
+      val m = math.sqrt(rem.toDouble).toLong
+      val mm = if ((m + 1) * (m + 1) <= rem) m + 1 else if (m * m > rem) m - 1 else m
+      v(j) = mm; v(j + 1) = -mm * s(g, j) * s(g, j + 1); rem -= mm * mm; j += 2
+    }
+    val nv = v.map(x => x * x).sum
+    assert(nv == 4 * dd * dd + 1 && v.indices.map(i => s(g, i) * v(i)).sum == dd)
+    val (d, a, b, c) = (dd.toDouble / math.sqrt(nv.toDouble), -0.5, -0.5, 0.5)
+    assert(((d + a) + b) + c == 0.0)
+    assert(Seq(d + ((a + b) + c), ((a + b) + c) + d, (d + a) + (b + c)).forall(_ < 0.0))
+    val row = Seq((0L, v)).toDF("vec_id", "v")
+    val want = ReferenceTwins.mipsIndexBits(row.withColumn("m2", lit(nv)), plan)
+      .collect().head.getSeq[Long](1)
+    assert((want.head >>> g & 1L) == 1L)
+    val (literal, inPlan) = strictCodegen {
+      (SignAlshRetrieval.corpusBitsWithM2(row, plan, nv).collect().head.getSeq[Long](1),
+        SignAlshRetrieval.corpusBits(row, plan).collect().head.getSeq[Long](1))
+    }
+    assert(literal == want && inPlan == want)
+  }
+
+  test("graft_mips_bits names the cause of a zero-norm probe and of M2 = 0") {
+    import spark.implicits._
+    import graft.pipeline.SignAlshRetrieval
+    import graft.pipeline.SignAlshRetrieval.MipsPlan
+    val plan = MipsPlan(2, 16, 4)
+    def causes(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.toString).mkString(" | ")
+    val mixed = Seq((1L, Array(0L, 0L, 0L)), (2L, Array(3L, -4L, 5L))).toDF("vec_id", "v")
+    val probe = causes(intercept[Exception] {
+      SignAlshRetrieval.probeBits(mixed, plan, col("vec_id") === 1L).collect()
+    })
+    assert(probe.contains("zero-norm probe") && !probe.contains("try_divide"), probe)
+    // the non-zero rows of the same relation hash fine
+    assert(SignAlshRetrieval.probeBits(mixed, plan, col("vec_id") === 2L).count() == 1L)
+    val allZero = Seq((1L, Array(0L, 0L)), (2L, Array(0L, 0L))).toDF("vec_id", "v")
+    for (run <- Seq[() => Any](
+        () => SignAlshRetrieval.corpusBitsWithM2(mixed, plan, 0L).collect(),
+        () => SignAlshRetrieval.corpusBits(allZero, plan).collect())) {
+      val msg = causes(intercept[Exception](run()))
+      assert(msg.contains("M2 = 0") && msg.contains("all-zero") && !msg.contains("try_divide"), msg)
+    }
   }
 
   test("graft_cosq compiles strictly and matches the kernel") {
@@ -191,7 +296,7 @@ class CodegenStrictSpec extends AnyFunSuite {
     val (kq, tq) = strictCodegen {
       val r = df.select(
         call_function("graft_quantize", col("v")).as("k"),
-        graft.functions.GraftFunctions.quantize(col("v")).as("t"))
+        ReferenceTwins.quantize(col("v")).as("t"))
         .collect().head
       (r.getSeq[Long](0), r.getSeq[Long](1))
     }
@@ -202,7 +307,7 @@ class CodegenStrictSpec extends AnyFunSuite {
     val (kq2, tq2) = strictCodegen {
       val r = dfd.select(
         call_function("graft_quantize", col("v"), lit(1000L)).as("k"),
-        graft.functions.GraftFunctions.quantize(col("v")).as("t"))
+        ReferenceTwins.quantize(col("v")).as("t"))
         .collect().head
       (r.getSeq[Long](0), r.getSeq[Long](1))
     }
@@ -214,7 +319,7 @@ class CodegenStrictSpec extends AnyFunSuite {
     val (ek, et) = strictCodegen {
       val r = edge.select(
         call_function("graft_quantize", col("v"), lit(1L)).as("k"),
-        graft.functions.GraftFunctions.quantize(col("v"), 1).as("t"))
+        ReferenceTwins.quantize(col("v"), 1).as("t"))
         .collect().head
       (r.getSeq[Long](0), r.getSeq[Long](1))
     }
@@ -236,7 +341,7 @@ class CodegenStrictSpec extends AnyFunSuite {
     val (k, t) = strictCodegen {
       val r = Seq((vecA, vecB)).toDF("a", "b").select(
         call_function("graft_dot", col("a"), col("b")).as("k"),
-        graft.functions.GraftFunctions.dotLong(col("a"), col("b")).as("t"))
+        ReferenceTwins.dotLong(col("a"), col("b")).as("t"))
         .collect().head
       (r.getLong(0), r.getLong(1))
     }

@@ -53,7 +53,7 @@ class CrossEngineSpec extends AnyFunSuite {
 
   test("graft_cosq kernel is bitwise-equal to the built-in cosine tree") {
     import spark.implicits._
-    import graft.functions.GraftFunctions
+    import graft.functions.ReferenceTwins
     graft.functions.GraftExpressions.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(50)((
@@ -62,7 +62,7 @@ class CrossEngineSpec extends AnyFunSuite {
     val df = rows.toDF("a", "b")
     val both = df.select(
       call_function("graft_cosq", col("a"), col("b")).as("fused"),
-      GraftFunctions.cosineQuantized(col("a"), col("b")).as("tree"))
+      ReferenceTwins.cosineQuantized(col("a"), col("b")).as("tree"))
       .collect()
     assert(both.forall(r =>
       java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==

@@ -2,7 +2,7 @@ package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
+import graft.functions.ReferenceTwins
 import graft.pipeline.{MipsIndex, SignAlshRetrieval}
 import graft.pipeline.SignAlshRetrieval.MipsPlan
 import graft.sources.TableIO
@@ -33,7 +33,7 @@ class MipsIndexSpec extends AnyFunSuite {
     val (store, pinned) = MipsIndex.topKWithHandle(spark, dir, col("vec_id") < 5, k = 10)
     val fromStore = try store.collect().map(_.toSeq).toSeq
       finally pinned.foreach(_.unpersist(blocking = false))
-    val e = emb.select(col("vec_id"), GraftFunctions.quantize(col("embedding")).as("v"))
+    val e = emb.select(col("vec_id"), ReferenceTwins.quantize(col("embedding")).as("v"))
     spark.catalog.clearCache()
     val fromMem = SignAlshRetrieval.topK(e, plan, col("vec_id") < 5, 10)
       .collect().map(_.toSeq).toSeq
@@ -68,7 +68,7 @@ class MipsIndexSpec extends AnyFunSuite {
     // the frozen maxnorm is a contract violation — separate test): exclude
     // the argmax-norm id from the delta slice explicitly
     val e = emb.select(col("vec_id"),
-      GraftFunctions.quantize(col("embedding")).as("v"))
+      ReferenceTwins.quantize(col("embedding")).as("v"))
     val maxId = e
       .select(col("vec_id"), call_function("graft_dot", col("v"), col("v")).as("n2"))
       .orderBy(col("n2").desc, col("vec_id")).first().getLong(0)

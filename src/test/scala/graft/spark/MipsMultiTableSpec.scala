@@ -2,7 +2,7 @@ package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
+import graft.functions.ReferenceTwins
 import graft.pipeline.SignAlshRetrieval
 import graft.pipeline.SignAlshRetrieval.MipsPlan
 
@@ -16,7 +16,7 @@ class MipsMultiTableSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private lazy val e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    .select(col("vec_id"), GraftFunctions.quantize(col("embedding")).as("v"))
+    .select(col("vec_id"), ReferenceTwins.quantize(col("embedding")).as("v"))
 
   test("planFor: a 10^9-row corpus gets ≥20-bit buckets and multi-table banding") {
     val plan = SignAlshRetrieval.planFor(1000000000L)

@@ -3,7 +3,7 @@ package graft.spark
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.core.{Rng, SimHasher, Similarities}
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, ReferenceTwins}
 
 /** The reference's statistical collision tests run THROUGH the Dataset path —
   * proving the Catalyst plan preserves the hash semantics (SURVEY.md §5). */
@@ -19,7 +19,7 @@ class SparkStatisticalSpec extends AnyFunSuite {
     val a = symbols.slice(0, 100)
     val b = symbols.slice(0, 75) ++ symbols.slice(100, 125) // J = 0.6
     val df = Seq((1L, a.toSeq), (2L, b.toSeq)).toDF("id", "shingles")
-    val mh = GraftFunctions.minhashSigUdf(10000, 0L)
+    val mh = ReferenceTwins.minhashSigUdf(10000, 0L)
     val sigs = df.select($"id", mh($"shingles").as("sig")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val freq = sigs(1L).zip(sigs(2L)).count { case (x, y) => x == y }.toDouble / 10000
@@ -52,8 +52,8 @@ class SparkStatisticalSpec extends AnyFunSuite {
   test("signature UDF equals the pure-Scala kernel (plan preserves semantics)") {
     import spark.implicits._
     val texts = Seq((7L, "the quick brown fox jumps over the lazy dog again and again"))
-    val sh = GraftFunctions.shingleHashesUdf(3, 42L)
-    val mh = GraftFunctions.minhashSigUdf(16, 42L)
+    val sh = ReferenceTwins.shingleHashesUdf(3, 42L)
+    val mh = ReferenceTwins.minhashSigUdf(16, 42L)
     val viaSpark = texts.toDF("id", "text")
       .select(mh(sh($"text")).as("sig")).first().getSeq[Long](0)
     val direct = graft.core.MinHasher(16, 42L)(
